@@ -13,6 +13,8 @@ idiomatic Spark DataFrame/SQL engine:
                  (ref Program.cs:748-781).
 - ``catalog``    catalog-snapshot DataFrames, the engine's introspection IR
                  (ref Program.cs:160-186; sys.columns analogue).
+- ``commit``     the on-disk commit primitives shared by every durable
+                 store (atomic JSON write, batch ledger, recovery lock).
 - ``operators``  tier-A relational operators (SURVEY.md §2.A) as query
                  builders checked against a DuckDB oracle.
 - ``pipeline``   tier-B clone pipeline: DDL gen + executor + table copy

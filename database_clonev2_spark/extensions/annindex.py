@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..commit import write_json_atomic
 from .shingleindex import DEFAULT_MAX_SEGMENTS, _maintainer_locked
 from .similarity import _as_double, cosine
 
@@ -78,10 +79,7 @@ def read_ivf_meta(path: str) -> dict:
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    """Fsync'd atomic rename commit — ``_manifest.write_json_atomic``
-    holds the single implementation and the durability rationale."""
-    from ._manifest import write_json_atomic
-
+    """The index's commit point: ``commit.write_json_atomic``."""
     write_json_atomic(_meta_path(path), meta)
 
 

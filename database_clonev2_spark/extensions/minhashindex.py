@@ -48,6 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..commit import write_json_atomic
 from .dedup import LSH_BANDS, NUM_PERM, minhash_band_frame
 from .shingleindex import (
     DEFAULT_MAX_SEGMENTS,
@@ -69,10 +70,7 @@ def read_minhash_meta(path: str) -> dict:
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    """Fsync'd atomic rename commit — ``_manifest.write_json_atomic``
-    holds the single implementation and the durability rationale."""
-    from ._manifest import write_json_atomic
-
+    """The index's commit point: ``commit.write_json_atomic``."""
     write_json_atomic(os.path.join(path, _META_FILE), meta)
 
 

@@ -68,6 +68,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..commit import _flock_guard, write_json_atomic
 from .dedup import DF_CAP, JACCARD_THRESHOLD, SHINGLE_WIDTH, _doc_shingles
 
 _META_FILE = "_shingle_meta.json"
@@ -95,10 +96,8 @@ def _maintainer_locked(path: str):
     neither can clobber the other's meta commit. Probes never take it —
     readers resolve whatever meta commit they observe, unchanged.
     Degrades exactly like the recovery-lock guard it reuses
-    (``pipeline.merge._flock_guard``): on a flock-less filesystem the
+    (``commit._flock_guard``): on a flock-less filesystem the
     documented single-writer contract is again the caller's job."""
-    from ..pipeline.merge import _flock_guard
-
     os.makedirs(path, exist_ok=True)
     with _flock_guard(os.path.join(path, "_maintainer.guard")) as g:
         yield g
@@ -122,10 +121,7 @@ def read_shingle_meta(path: str) -> dict:
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    """Fsync'd atomic rename commit — ``_manifest.write_json_atomic``
-    holds the single implementation and the durability rationale."""
-    from ._manifest import write_json_atomic
-
+    """The index's commit point: ``commit.write_json_atomic``."""
     write_json_atomic(_meta_path(path), meta)
 
 
@@ -689,9 +685,8 @@ def append_shingle_index(
     derives from ``batch_id``) before committing once. The torn-batch
     double-count this function used to disclaim is structurally gone.
     Filesystem contract: POSIX/HDFS atomic same-dir rename for the
-    meta file (the bucketed-merge manifest contract, stated at
-    ``pipeline/merge.py``); object stores need the usual manifest
-    service."""
+    meta file (the commit-protocol contract, stated at
+    ``commit.py``); object stores need the usual manifest service."""
     with _maintainer_locked(path):
         result = _append_shingle_locked(spark, path, docs, batch_id)
     if max_segments is not None and result.pop("_n_segments", 0) > max_segments:

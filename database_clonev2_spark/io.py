@@ -128,55 +128,6 @@ def load_spread(
     return df.repartition(target, *keys) if keys else df.repartition(target)
 
 
-def pin_layout(df: DataFrame, *keys: str) -> DataFrame:
-    """Materialize ``df`` hash-partitioned AND in-partition-sorted on
-    ``keys`` (round 13, guide §2.4 "two operations keyed the same way can
-    share one exchange"): a cached frame's outputPartitioning/outputOrdering
-    survive into consumer plans (verified on the final AQE plan: the
-    sketch self-joins become SortMergeJoin directly over the two
-    InMemoryTableScans — ZERO exchanges, ZERO sorts), where a
-    ``localCheckpoint`` erases both (UnknownPartitioning — measured, this
-    Spark build) and forces every consumer to re-shuffle + re-sort. One
-    build-time shuffle+sort of the frame buys an exchange-free and
-    sort-free self-join — a net win at ANY scale for a frame read by both
-    join sides, because the join would otherwise shuffle the same bytes
-    twice and sort twice.
-
-    Partition count = ``spark.sql.shuffle.partitions`` (the knob a
-    production deployment already sizes for shuffle width; both self-join
-    sides read the SAME cache, so co-partitioning holds for any value).
-    The count() materializes eagerly so concurrent consumer stages never
-    race to fill the cache. Trade-off vs localCheckpoint: lineage is NOT
-    truncated (consumer plans re-print the build subtree; eviction
-    recomputes it).
-
-    STATUS (round 13): measured and currently UNUSED in query paths — at
-    fixture scale AQE broadcasts the ~8 MB sketch frames anyway, so the
-    layout's extra exchange + sort + count job made the capped-Jaccard
-    shape 0.5 s SLOWER end-to-end (min-of-4, same session) and the
-    change was reverted to localCheckpoint pins.
-
-    STATUS (round 14, final): re-measured at 20× scale (100k-doc
-    synthetic corpus, tools/gen_synth_docs.py — the sketch frames now
-    genuinely shuffle): capped-Jaccard 9.17 vs 9.99 s (marginal win
-    inside a 2× noise band), minhash bands 2.47 vs 2.00 s (clear LOSS),
-    simhash blocks 6.36 vs 6.55 s (tie). NOT adopted: with only two
-    join-side consumers per sketch frame, the layout's own
-    shuffle+sort+count job is never consistently amortized. Kept with
-    its test as the documented shape for frames with MANY keyed
-    consumers that outgrow broadcast."""
-    from pyspark.storagelevel import StorageLevel
-
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    out = (
-        df.repartition(n, *keys)
-        .sortWithinPartitions(*keys)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    out.count()
-    return out
-
-
 def spread_frame(df: DataFrame, *keys: str) -> DataFrame:
     """``load_spread``'s guard for a frame that is NOT a raw table scan
     (e.g. an already-materialized localCheckpoint): when its ACTUAL
@@ -198,7 +149,7 @@ def spread_frame(df: DataFrame, *keys: str) -> DataFrame:
     # a logical plan that is neither an RDD-scan leaf (localCheckpoint)
     # nor cache-pinned would pay the planning round-trip silently
     plan = df._jdf.queryExecution().analyzed().toString()
-    if not plan.startswith(("LogicalRDD", "InMemoryRelation")) and not df.is_cached:
+    if not plan.startswith("LogicalRDD") and not df.is_cached:
         raise ValueError(
             "spread_frame expects a materialized frame (localCheckpoint or "
             "persisted); got a lazy plan — materialize first, or use "

@@ -21,7 +21,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .merge import _HW_FILE, _swap_write
+from .merge import HW_FILE, swap_write
 
 # Default target: a modest multiple of a row-group, small enough for the
 # local fixtures to exercise multi-file outputs, large enough that the
@@ -128,7 +128,7 @@ def compact_parquet(
     near-atomic swap: new files are fully written beside the target
     before two renames publish them, so readers never observe a
     half-compacted table (the crash window is the documented
-    ``_swap_write`` one).
+    ``swap_write`` one).
 
     Scale notes: ``coalesce`` (not ``repartition``) avoids a shuffle —
     compaction is pure I/O re-binning, and the narrow dependency lets
@@ -217,7 +217,7 @@ def compact_parquet(
     # (copied into the new directory before the renames), so no crash
     # position can produce a compacted table that lost its mark — losing
     # it silently demotes the next sync to the O(|target|) legacy scan
-    rows = _swap_write(spark, df, path, preserve_files=(_HW_FILE,))
+    rows = swap_write(spark, df, path, preserve_files=(HW_FILE,))
     files_after, _ = _dir_stats(path)
     return {
         "files_before": files_before,
@@ -264,8 +264,8 @@ def compact_bucketed_target(
     """
     from .merge import (
         BUCKET_COL,
-        _commit_staged_buckets,
-        _read_bucket_meta,
+        commit_staged_buckets,
+        read_bucket_meta,
         recover_pending_commit,
     )
 
@@ -276,7 +276,7 @@ def compact_bucketed_target(
             "compact_parquet for flat parquet directories"
         )
     recover_pending_commit(path_str)
-    meta = _read_bucket_meta(path_str)
+    meta = read_bucket_meta(path_str)
     existing = sorted(
         int(d.split("=", 1)[1])
         for d in os.listdir(path_str)
@@ -312,7 +312,7 @@ def compact_bucketed_target(
         files_before_total += n_files
         files_after_total += _dir_stats(os.path.join(staging, f"{BUCKET_COL}={b}"))[0]
     if touched:
-        _commit_staged_buckets(path_str, token, staging, touched)
+        commit_staged_buckets(path_str, token, staging, touched)
     else:
         shutil.rmtree(staging, ignore_errors=True)
     return {

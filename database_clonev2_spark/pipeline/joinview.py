@@ -45,16 +45,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .merge import (
-    _BATCHES_KEEP,
-    BUCKET_COL,
+from ..commit import (
+    _append_applied_batch,
     _manifest_is_stale,
-    _with_bucket,
+    applied_batches,
+    epoch_dir_name,
+    read_json,
+    write_json_atomic,
 )
+from .merge import BUCKET_COL, with_bucket
 
 _META_FILE = "_join_meta.json"
 _COMMIT_FILE = "_commit.json"
-_LEDGER_FILE = "_applied_batches.json"
 _STORES = ("left", "right", "view")
 
 
@@ -63,39 +65,19 @@ def _meta_path(root: str) -> str:
 
 
 def _read_meta(root: str) -> dict:
-    with open(_meta_path(root)) as fh:
-        return json.load(fh)
+    return read_json(_meta_path(root))
 
 
 def _write_meta(dir_path: str, meta: dict) -> None:
-    tmp = os.path.join(dir_path, _META_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.rename(tmp, os.path.join(dir_path, _META_FILE))
-
-
-def _ledger_path(root: str) -> str:
-    return os.path.join(root, _LEDGER_FILE)
+    write_json_atomic(os.path.join(dir_path, _META_FILE), meta)
 
 
 def applied_join_batches(root: str) -> list:
-    p = _ledger_path(root)
-    if not os.path.exists(p):
-        return []
-    with open(p) as fh:
-        return json.load(fh)["batch_ids"]
+    return applied_batches(root)
 
 
 def _append_join_batch(root: str, batch_id) -> None:
-    ids = applied_join_batches(root)
-    if batch_id in ids:
-        return
-    ids.append(batch_id)
-    ids = ids[-_BATCHES_KEEP:]
-    tmp = _ledger_path(root) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"batch_ids": ids}, fh)
-    os.rename(tmp, _ledger_path(root))
+    _append_applied_batch(root, batch_id)
 
 
 def _commit_path(root: str) -> str:
@@ -107,29 +89,17 @@ def _write_manifest(
 ) -> None:
     import time
 
-    man = {
-        "token": token,
-        "staged": staged,  # {store: [bucket ids]}
-        "batch_id": batch_id,
-        "change_dir": change_dir,
-        "pid": os.getpid(),
-        "wall_ts": time.time(),
-    }
-    tmp = _commit_path(root) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(man, fh)
-    os.rename(tmp, _commit_path(root))
-
-
-def _change_dir_name(batch_id, token: str) -> str:
-    """Filesystem-safe per-epoch change-log dir name; epoch-unique by the
-    ledger contract (a replayed id no-ops before reaching the write)."""
-    if batch_id is None:
-        return f"epoch-{token}"
-    safe = "".join(
-        ch if ch.isalnum() or ch in "-_." else "_" for ch in str(batch_id)
+    write_json_atomic(
+        _commit_path(root),
+        {
+            "token": token,
+            "staged": staged,  # {store: [bucket ids]}
+            "batch_id": batch_id,
+            "change_dir": change_dir,
+            "pid": os.getpid(),
+            "wall_ts": time.time(),
+        },
     )
-    return f"epoch-{safe}"
 
 
 def _roll_forward(root: str, man: dict) -> None:
@@ -182,8 +152,7 @@ def recover_pending_join_commit(root: str, only_if_stale: bool = False) -> dict:
     report: dict = {}
     cp = _commit_path(root)
     if os.path.exists(cp):
-        with open(cp) as fh:
-            man = json.load(fh)
+        man = read_json(cp)
         if only_if_stale and not _manifest_is_stale(man):
             return {"skipped": "manifest writer alive"}
         _roll_forward(root, man)
@@ -276,11 +245,11 @@ def maintain_join_view(
         token = uuid.uuid4().hex[:8]
         staging = f"{root}.__create_{token}"
         os.makedirs(staging)
-        a = _with_bucket(batch_left, key_cols, n_buckets)
-        b = _with_bucket(batch_right, key_cols, n_buckets)
+        a = with_bucket(batch_left, key_cols, n_buckets)
+        b = with_bucket(batch_right, key_cols, n_buckets)
         # creation may be a BACKFILL (full initial tables), so unlike the
         # delta folds no broadcast is forced here — AQE picks by size
-        dv = _with_bucket(
+        dv = with_bucket(
             batch_left.join(batch_right, key_cols), key_cols, n_buckets
         )
         a.write.partitionBy(BUCKET_COL).parquet(os.path.join(staging, "left"))
@@ -289,7 +258,7 @@ def maintain_join_view(
         if change_feed:
             dv.drop(BUCKET_COL).write.parquet(
                 os.path.join(
-                    staging, "_changes", _change_dir_name(batch_id, token)
+                    staging, "_changes", epoch_dir_name(batch_id, token)
                 )
             )
         meta = {
@@ -312,7 +281,7 @@ def maintain_join_view(
             "batch_id": batch_id,
             "view_rows_added": n_dv,
             "touched": {s: n_buckets for s in _STORES},
-            "change_dir": _change_dir_name(batch_id, token) if change_feed else None,
+            "change_dir": epoch_dir_name(batch_id, token) if change_feed else None,
         }
 
     recover_pending_join_commit(root)
@@ -344,8 +313,8 @@ def maintain_join_view(
             f"{sorted(empty_right.columns)}"
         )
 
-    da = _with_bucket(da, key_cols, n_buckets).persist()
-    db = _with_bucket(db, key_cols, n_buckets).persist()
+    da = with_bucket(da, key_cols, n_buckets).persist()
+    db = with_bucket(db, key_cols, n_buckets).persist()
     try:
         buckets_a = _delta_buckets(da)
         buckets_b = _delta_buckets(db)
@@ -367,7 +336,7 @@ def maintain_join_view(
         view_schema_cols = [
             f.name for f in _store_schema(meta, "view") if f.name != BUCKET_COL
         ]
-        dv = _with_bucket(
+        dv = with_bucket(
             term1.select(*view_schema_cols).unionByName(
                 term2.select(*view_schema_cols)
             ),
@@ -397,7 +366,7 @@ def maintain_join_view(
         if change_feed:
             # even an empty ΔV publishes: the dir marks the epoch as
             # processed for pull-based consumers
-            change_dir = _change_dir_name(batch_id, token)
+            change_dir = epoch_dir_name(batch_id, token)
             dv.drop(BUCKET_COL).write.parquet(os.path.join(staging, "changes"))
         if staged or change_dir:
             _write_manifest(root, token, staged, batch_id, change_dir)

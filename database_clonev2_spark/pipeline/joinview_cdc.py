@@ -50,16 +50,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..commit import _append_applied_batch, applied_batches
 from .merge import (
     BUCKET_COL,
-    _append_applied_batch,
-    _read_bucket_meta,
-    _with_bucket,
-    applied_batches,
     list_merge_changes,
     merge_delete_bucketed,
     merge_upsert_bucketed,
+    read_bucket_meta,
     read_merge_changes,
+    with_bucket,
 )
 
 PAIR_EPOCH_COL = "_pair_epoch"
@@ -94,7 +93,7 @@ def maintain_join_view_from_changes(
         if c not in changes.columns:
             raise ValueError(f"changes must carry {c!r}")
     right = spark.read.parquet(right_path)
-    rmeta = _read_bucket_meta(right_path)
+    rmeta = read_bucket_meta(right_path)
     if rmeta["key_cols"] != [join_key]:
         raise ValueError(
             f"right store must be keyed on the join key [{join_key!r}], "
@@ -119,7 +118,7 @@ def maintain_join_view_from_changes(
     ).select(*left_cols)
 
     def prune_right(keys: DataFrame) -> DataFrame:
-        bk = _with_bucket(keys.select(join_key).distinct(), [join_key],
+        bk = with_bucket(keys.select(join_key).distinct(), [join_key],
                           rmeta["n_buckets"])
         touched = [r[BUCKET_COL] for r in bk.select(BUCKET_COL).distinct().collect()]
         if not touched:

@@ -30,20 +30,19 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..commit import _append_applied_batch, applied_batches
 from .merge import (
     BUCKET_COL,
-    _append_applied_batch,
-    _commit_staged_buckets,
-    _read_bucket_meta,
-    _widened_schema,
-    _with_bucket,
-    _write_bucket_meta,
-    applied_batches,
+    commit_staged_buckets,
     is_bucketed,
     list_merge_changes,
+    read_bucket_meta,
     read_merge_changes,
     recorded_schema,
     recover_pending_commit,
+    widened_schema,
+    with_bucket,
+    write_bucket_meta,
 )
 
 FROM_COL = "_from_epoch"
@@ -145,12 +144,12 @@ def _fold_one_epoch(
             # schemaless parquet dir (poisoned path); skip — the sync
             # loop revisits it until a non-empty epoch creates the store
             return {"opened": 0, "closed": 0, "touched_buckets": 0}
-        upd = _with_bucket(opening, key_cols, n_buckets)
+        upd = with_bucket(opening, key_cols, n_buckets)
         token = uuid.uuid4().hex[:8]
         staging = f"{history_path}.__stage_{token}"
         upd.write.partitionBy(BUCKET_COL).parquet(staging)
         n = spark.read.parquet(staging).count()
-        _write_bucket_meta(staging, n_buckets, list(key_cols))
+        write_bucket_meta(staging, n_buckets, list(key_cols))
         _append_applied_batch(staging, epoch_name)
         os.rename(staging, history_path)
         return {"opened": n, "closed": 0, "touched_buckets": n_buckets}
@@ -160,7 +159,7 @@ def _fold_one_epoch(
     recover_pending_commit(history_path)
     if epoch_name in applied_batches(history_path):
         return {"applied": False, "batch_id": epoch_name, "reason": "already_applied"}
-    meta = _read_bucket_meta(history_path)
+    meta = read_bucket_meta(history_path)
     if meta["n_buckets"] != n_buckets or meta["key_cols"] != list(key_cols):
         raise ValueError(
             f"bucket layout mismatch: history has n_buckets={meta['n_buckets']} "
@@ -181,13 +180,13 @@ def _fold_one_epoch(
             "NULL)"
         )
     if extra:
-        hist_schema = _widened_schema(hist_schema, ch.schema, extra)
+        hist_schema = widened_schema(hist_schema, ch.schema, extra)
         hcols = hcols + extra
     # opening rows missing history columns (an older-schema epoch folded
     # into an already-evolved history) null-fill
     for c in (c for c in hcols if c not in opening.columns):
         opening = opening.withColumn(c, F.lit(None).cast(hist_schema[c].dataType))
-    all_keys = _with_bucket(
+    all_keys = with_bucket(
         ch.select(*key_cols).distinct(), key_cols, n_buckets
     ).persist()
     try:
@@ -214,7 +213,7 @@ def _fold_one_epoch(
             )
             .drop("_close")
         )
-        merged = rewritten.unionByName(_with_bucket(opening, key_cols, n_buckets))
+        merged = rewritten.unionByName(with_bucket(opening, key_cols, n_buckets))
         token = uuid.uuid4().hex[:8]
         staging = f"{history_path}.__stage_{token}"
         merged.write.partitionBy(BUCKET_COL).parquet(staging)
@@ -222,7 +221,7 @@ def _fold_one_epoch(
             os.makedirs(os.path.join(staging, f"{BUCKET_COL}={b}"), exist_ok=True)
         n_open = opening.count()
         n_close = closing_keys.count()
-        _commit_staged_buckets(
+        commit_staged_buckets(
             history_path, token, staging, touched, batch_id=epoch_name,
             schema_json=hist_schema.json(),
         )

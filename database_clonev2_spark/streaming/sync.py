@@ -37,11 +37,11 @@ import os
 from pyspark.sql import DataFrame
 
 from ..pipeline.merge import (
-    _swap_write,
     is_bucketed,
     merge_additive_bucketed,
     merge_upsert,
     merge_upsert_bucketed,
+    swap_write,
 )
 
 
@@ -153,7 +153,7 @@ def _merge_batch(
         # up to merge_upsert_bucketed's documented crash window: a
         # crash between a bucket's two swap renames strands that
         # bucket's old data under a recoverable .__old_b<i> suffix
-        # (same class as _swap_write on the flat path, scoped to 1/N).
+        # (same class as swap_write on the flat path, scoped to 1/N).
         merge_upsert_bucketed(
             spark,
             target_path,
@@ -191,7 +191,7 @@ def _merge_batch(
                 .agg(F.max_by(F.struct(*non_key), F.col(order_col)).alias("_s"))
                 .select(*key_cols, *[F.col(f"_s.{c}").alias(c) for c in non_key])
             )
-            _swap_write(spark, merged, target_path)
+            swap_write(spark, merged, target_path)
     finally:
         deduped.unpersist()
 
@@ -675,9 +675,9 @@ def stream_apply_cdc(
             # in-flight evolution guard (docstring): fail BEFORE anything
             # commits so the checkpoint never advances past files whose
             # evolved columns this stream's pinned schema would drop
-            from ..pipeline.merge import BUCKET_COL, _read_bucket_meta
+            from ..pipeline.merge import BUCKET_COL, read_bucket_meta
 
-            meta = _read_bucket_meta(source_path)
+            meta = read_bucket_meta(source_path)
             if meta.get("schema_json"):
                 import json as _json
 
@@ -823,7 +823,7 @@ def stream_scd2_maintain(
     from pyspark.sql import functions as F
 
     from ..pipeline.scd2 import _fold_one_epoch
-    from ..pipeline.merge import applied_batches
+    from ..commit import applied_batches
 
     if "_epoch" not in change_stream.columns:
         raise ValueError(
@@ -883,7 +883,7 @@ def stream_join_view_cdc(
     from pyspark.sql import functions as F
 
     from ..pipeline.joinview_cdc import maintain_join_view_from_changes
-    from ..pipeline.merge import applied_batches
+    from ..commit import applied_batches
 
     if "_epoch" not in change_stream.columns:
         raise ValueError(

@@ -1418,7 +1418,7 @@ class TestDeleteCrashWindows:
         )
         # every key in ONE bucket, plus a few elsewhere → the swap loop
         # moves one emptied bucket and >=1 rewritten bucket
-        bucketed = merge_mod._with_bucket(base, ["id"], 4)
+        bucketed = merge_mod.with_bucket(base, ["id"], 4)
         b0 = [r["id"] for r in bucketed.where(f"{BUCKET_COL} = 0").collect()]
         others = [
             r["id"] for r in bucketed.where(f"{BUCKET_COL} = 1").collect()

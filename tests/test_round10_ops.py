@@ -375,9 +375,7 @@ class TestReleaseLockUnderGuard:
         away, leaving exactly one lock."""
         import fcntl
 
-        from database_clonev2_spark.pipeline.merge import (
-            _release_recovery_lock,
-        )
+        from database_clonev2_spark.commit import _release_recovery_lock
 
         lock = str(tmp_path / "_recovery.lock")
         # the state after a backstop reclaim: the NEW winner's lock
@@ -487,6 +485,7 @@ class TestQuiesceFence:
         writer that never checks markers) must cost a RETRY, not a torn
         cut — the lazy branch now reruns the validation the
         materialized branch always had."""
+        from database_clonev2_spark import commit
         from database_clonev2_spark.pipeline import merge as merge_mod
 
         tgt = _bucketed_table(spark, tmp_path, "t", [(1, "a"), (2, "b")])
@@ -499,7 +498,7 @@ class TestQuiesceFence:
             # BEFORE the revalidation at return
             if fired["n"] == 0:
                 fired["n"] = 1
-                merge_mod._append_applied_batch(p, "e-midair")
+                commit._append_applied_batch(p, "e-midair")
             return real_read(sp, p)
 
         monkeypatch.setattr(

@@ -1,5 +1,5 @@
 """Round-13 OPTIMIZATION-phase tests — the helpers the round introduced
-(`io.load_spread` / `io.spread_frame` / `io.pin_layout`), the driver-side
+(`io.load_spread` / `io.spread_frame`), the driver-side
 FK-closure walk, and the one-exchange co-purchase pair build. Each test
 pins the property the optimization claims (value identity + the structural
 guarantee), not timings — timings live in BENCH_r13.json."""
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from database_clonev2_spark.io import (
     load,
     load_spread,
-    pin_layout,
     spread_frame,
     _parse_bytes,
 )
@@ -97,40 +96,6 @@ class TestSpreadFrame:
             assert _rows(df) == _rows(out)
         finally:
             df.unpersist()
-
-
-class TestPinLayout:
-    def test_partitioning_and_ordering_survive_into_consumer_plan(self, spark):
-        pinned = pin_layout(
-            spark.range(5000).select((F.col("id") % 101).alias("k"), "id"), "k"
-        )
-        try:
-            # (the cache's outputPartitioning is not directly readable
-            # through the AQE wrapper — the consumer-plan assertion below
-            # is the property that matters: no re-shuffle above the cache)
-            a, b = pinned.alias("a"), pinned.alias("b")
-            j = a.join(
-                b,
-                (F.col("a.k") == F.col("b.k")) & (F.col("a.id") < F.col("b.id")),
-            )
-            j.write.format("noop").mode("overwrite").save()
-            final = j._jdf.queryExecution().executedPlan().toString()
-            # consumer side of the final plan: no shuffle exchange above
-            # the cache reads (the cache-BUILD lineage below
-            # InMemoryRelation legitimately contains the one layout
-            # exchange)
-            consumer = final.split("InMemoryRelation")[0]
-            assert "Exchange hashpartitioning" not in consumer
-        finally:
-            pinned.unpersist()
-
-    def test_values_identical(self, spark):
-        df = spark.range(300).select((F.col("id") % 13).alias("k"), "id")
-        pinned = pin_layout(df, "k")
-        try:
-            assert _rows(df) == _rows(pinned)
-        finally:
-            pinned.unpersist()
 
 
 class TestFkClosureWalk:

@@ -57,8 +57,13 @@ class TestAqeFloorConf:
     CONF = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
     def test_session_applies_floor(self, spark):
-        # the pytest session fixture goes through get_spark -> 64k default
-        assert spark.conf.get(self.CONF) in ("64k", "65536", "64kb")
+        # the pytest session fixture goes through get_spark -> the
+        # exported override when set, else the 64k default
+        override = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE")
+        if override is not None:
+            assert spark.conf.get(self.CONF) == override
+        else:
+            assert spark.conf.get(self.CONF) in ("64k", "65536", "64kb")
 
     def test_tune_session_respects_env(self, spark, monkeypatch):
         from database_clonev2_spark.session import tune_session

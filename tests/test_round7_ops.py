@@ -1303,7 +1303,7 @@ def test_join_roll_forward_recovers_from_every_crash_position(tmp_path, monkeypa
 def test_merge_commit_recovers_from_every_crash_position(tmp_path, monkeypatch):
     """Exhaustive crash-position sweep over the single-store merge
     commit (the tri-store sibling is swept above): kill
-    _commit_staged_buckets at EVERY rename, recover via
+    commit_staged_buckets at EVERY rename, recover via
     recover_pending_commit, and require the identical final state."""
     import json
     import os
@@ -1342,7 +1342,7 @@ def test_merge_commit_recovers_from_every_crash_position(tmp_path, monkeypatch):
 
     ref = str(tmp_path / "ref.parquet")
     staging = build(ref)
-    mg._commit_staged_buckets(
+    mg.commit_staged_buckets(
         ref, token, staging, touched, batch_id=5, change_dir="epoch-5"
     )
     want = snapshot(ref)
@@ -1365,7 +1365,7 @@ def test_merge_commit_recovers_from_every_crash_position(tmp_path, monkeypatch):
 
         monkeypatch.setattr(mg.os, "rename", dying)
         try:
-            mg._commit_staged_buckets(
+            mg.commit_staged_buckets(
                 target, token, staging, touched, batch_id=5, change_dir="epoch-5"
             )
             crashed = False
@@ -2623,11 +2623,11 @@ def test_verify_replica_localizes_divergence(spark, tmp_path):
     """Round 7: per-bucket checksum verification — a synced replica
     matches; corrupting one key diverges EXACTLY its bucket."""
     from database_clonev2_spark.pipeline.merge import (
-        _with_bucket,
         merge_delete_bucketed,
         merge_upsert_bucketed,
         sync_replica_from_changes,
         verify_replica,
+        with_bucket,
     )
 
     src = str(tmp_path / "src.parquet")
@@ -2647,7 +2647,7 @@ def test_verify_replica_localizes_divergence(spark, tmp_path):
         spark, rep, spark.createDataFrame([(victim,)], "id long"), ["id"],
         n_buckets=4,
     )
-    want_bucket = _with_bucket(
+    want_bucket = with_bucket(
         spark.createDataFrame([(victim,)], "id long"), ["id"], 4
     ).first()["_bucket"]
     res = verify_replica(spark, src, rep)

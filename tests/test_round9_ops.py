@@ -176,9 +176,7 @@ class TestRecoveryLockReviewHardening:
     def test_release_is_ownership_verified(self, tmp_path):
         """A dethroned holder's release must not delete the new winner's
         lock: release removes only a body carrying OUR token."""
-        from database_clonev2_spark.pipeline.merge import (
-            _release_recovery_lock,
-        )
+        from database_clonev2_spark.commit import _release_recovery_lock
 
         lock = str(tmp_path / "_recovery.lock")
         fd = os.open(lock, os.O_CREAT | os.O_WRONLY)

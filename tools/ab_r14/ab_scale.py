@@ -5,7 +5,10 @@ shuffles.
 Subcommands:
   probe                 one timed run of each subject for magnitude sizing
   simhash [reps]        explode+groupBy vs arrays+Arrow vote kernel
-  pinlayout [reps]      localCheckpoint vs pin_layout on the sketch self-joins
+
+(The round-14 pinlayout subcommand — localCheckpoint vs a
+hash-partitioned, sorted cache on the sketch self-joins — was removed
+with the declined helper; its result is recorded in README.md.)
 """
 import os, sys, time
 sys.path.insert(0, "/root/repo")
@@ -14,7 +17,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 from database_clonev2_spark.session import get_spark
-from database_clonev2_spark.io import load, load_spread, pin_layout
+from database_clonev2_spark.io import load, load_spread
 from database_clonev2_spark.extensions import dedup as dd
 
 SF = "/root/synthdata/docs100k"
@@ -57,7 +60,7 @@ def simhash_query(fp_builder):
     blocks.unpersist(); fp.unpersist()
 
 
-# --- pin_layout subjects ----------------------------------------------
+# --- sketch self-join subjects ---------------------------------------
 
 def capped_sh_build():
     sh = dd._doc_shingles(load_spread(spark, SF, "documents", "doc_id")).select(
@@ -74,17 +77,14 @@ def capped_jaccard(kept):
     )
 
 
-def run_capped(pin):
-    built = capped_sh_build()
-    kept = pin_layout(built, "sh") if pin else built.localCheckpoint()
-    noop(capped_jaccard(kept))
-    if pin:
-        kept.unpersist()
+def run_capped():
+    noop(capped_jaccard(capped_sh_build().localCheckpoint()))
 
 
-def run_minhash(pin):
-    bands = dd.minhash_band_frame(load_spread(spark, SF, "documents", "doc_id"))
-    bands = pin_layout(bands, "band", "bucket") if pin else bands.localCheckpoint()
+def run_minhash():
+    bands = dd.minhash_band_frame(
+        load_spread(spark, SF, "documents", "doc_id")
+    ).localCheckpoint()
     a, b = bands.alias("a"), bands.alias("b")
     out = (
         a.join(
@@ -98,22 +98,6 @@ def run_minhash(pin):
         .orderBy("doc_i", "doc_j")
     )
     noop(out)
-    if pin:
-        bands.unpersist()
-
-
-def run_simblocks(pin):
-    fp = dd.simhash_fingerprints(
-        load_spread(spark, SF, "documents", "doc_id")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    blocks = dd.simhash_block_keys(fp, 12, 2)
-    if pin:
-        blocks = pin_layout(blocks, "combo", "val")
-    else:
-        blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
-        blocks.count()
-    noop(dd.simhash_blocked_pairs(fp, blocks=blocks).orderBy("doc_i", "doc_j"))
-    blocks.unpersist(); fp.unpersist()
 
 
 def ab(name, variants, reps):
@@ -133,14 +117,10 @@ if cmd == "probe":
     print("fp_groupby_noop", round(timed("probe:fp_groupby", lambda: noop(fp_groupby())), 2), flush=True)
     print("fp_arrow_noop", round(timed("probe:fp_arrow", lambda: noop(fp_arrow())), 2), flush=True)
     print("simhash_q_groupby", round(timed("probe:simq", lambda: simhash_query(fp_groupby)), 2), flush=True)
-    print("capped_ckpt", round(timed("probe:capped", lambda: run_capped(False)), 2), flush=True)
-    print("minhash_ckpt", round(timed("probe:minhash", lambda: run_minhash(False)), 2), flush=True)
+    print("capped_ckpt", round(timed("probe:capped", run_capped), 2), flush=True)
+    print("minhash_ckpt", round(timed("probe:minhash", run_minhash), 2), flush=True)
 elif cmd == "simhash":
     ab("fp_build", {"groupby": lambda: noop(fp_groupby()), "arrow": lambda: noop(fp_arrow())}, reps)
     ab("simhash_full", {"groupby": lambda: simhash_query(fp_groupby), "arrow": lambda: simhash_query(fp_arrow)}, reps)
-elif cmd == "pinlayout":
-    ab("capped_jaccard", {"ckpt": lambda: run_capped(False), "pin": lambda: run_capped(True)}, reps)
-    ab("minhash_bands", {"ckpt": lambda: run_minhash(False), "pin": lambda: run_minhash(True)}, reps)
-    ab("simhash_blocks", {"ckpt": lambda: run_simblocks(False), "pin": lambda: run_simblocks(True)}, reps)
 else:
     raise SystemExit(f"unknown cmd {cmd}")

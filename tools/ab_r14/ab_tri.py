@@ -1,9 +1,11 @@
 """VERDICT r13 item 5 — tri three-way self-join: at fixture scale the
 arms all BROADCAST (plans/r13 tri after-plan: zero Sort nodes), so the
 "per-arm sorts" premise only bites once edges outgrow broadcast. Emulate
-that regime with autoBroadcastJoinThreshold=-1 and A/B the edges pin:
-localCheckpoint (lazy, current) vs pin_layout(edges, "pa").
-Also capture plan node counts for the record.
+that regime with autoBroadcastJoinThreshold=-1 and time the current
+lazy localCheckpoint edges pin. Also capture plan node counts for the
+record. (The round-14 A/B arm against a hash-partitioned, sorted cache
+of the edges was removed with the declined helper; its result is
+recorded in README.md.)
 """
 import os, sys, time
 sys.path.insert(0, "/root/repo")
@@ -11,7 +13,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 from pyspark.sql import functions as F
 from database_clonev2_spark.session import get_spark
-from database_clonev2_spark.io import load, pin_layout
+from database_clonev2_spark.io import load
 import database_clonev2_spark.operators.graph as g
 
 SF = "/root/testdata/sf0.1"
@@ -66,47 +68,33 @@ def build_edges():
     )
 
 
-def run(pin):
+def run():
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        edges = build_edges()
-        edges = pin_layout(edges, "pa") if pin else edges.localCheckpoint(eager=False)
-        edges.createOrReplaceTempView("edges")
+        build_edges().localCheckpoint(eager=False).createOrReplaceTempView("edges")
         out = spark.sql(TRI_SQL)
         t0 = time.time()
         out.write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        if pin:
-            edges.unpersist()
-        return dt
+        return time.time() - t0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
-run(False); run(True)  # warm
-t = {"ckpt": [], "pin": []}
-for _ in range(4):
-    t["ckpt"].append(run(False))
-    t["pin"].append(run(True))
-print("tri_noauto", {k: round(min(v), 3) for k, v in t.items()},
-      {k: [round(x, 2) for x in sorted(v)] for k, v in t.items()}, flush=True)
+run()  # warm
+t = sorted(run() for _ in range(4))
+print("tri_noauto", {"ckpt": round(t[0], 3)}, {"ckpt": [round(x, 2) for x in t]}, flush=True)
 
-# plan-shape record: Sort/Exchange node counts in the forced-shuffle plans
+# plan-shape record: Sort/Exchange node counts in the forced-shuffle plan
 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-for pin in (False, True):
-    edges = build_edges()
-    edges = pin_layout(edges, "pa") if pin else edges.localCheckpoint(eager=False)
-    edges.createOrReplaceTempView("edges")
-    df = spark.sql(TRI_SQL)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    import re
-    counts = {
-        w: len(re.findall(r"\(\d+\) " + w + r"\b", plan))
-        for w in ("Exchange", "Sort", "SortMergeJoin", "BroadcastHashJoin")
-    }
-    print("pin" if pin else "ckpt", counts, flush=True)
-    if pin:
-        edges.unpersist()
+build_edges().localCheckpoint(eager=False).createOrReplaceTempView("edges")
+df = spark.sql(TRI_SQL)
+plan = df._sc._jvm.PythonSQLUtils.explainString(
+    df._jdf.queryExecution(), "formatted"
+)
+import re
+counts = {
+    w: len(re.findall(r"\(\d+\) " + w + r"\b", plan))
+    for w in ("Exchange", "Sort", "SortMergeJoin", "BroadcastHashJoin")
+}
+print("ckpt", counts, flush=True)
 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")

@@ -4,7 +4,7 @@ measurement (round 14, VERDICT r13 item 1).
 The driver's fixtures stop at sf0.1 (5,000 docs), where the bench is
 job-latency-bound (8-core total == 32-core total, PERF_r13.json), so the
 per-byte candidates reverted in round 13 (the scan-side Arrow SimHash vote
-kernel, `pin_layout` sketch self-joins) cannot be ranked there. This tool
+kernel, sorted-cache sketch self-joins) cannot be ranked there. This tool
 synthesizes a documents corpus N times larger with the SAME measured shape
 as /root/testdata/sf0.1/documents.parquet:
 
