@@ -8,7 +8,9 @@ reference's scalability cliff, Program.cs:611)."""
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 FIXTURE_TABLES = [
@@ -64,7 +66,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in FIXTURE_TABLES if os.path.exists(table_path(sf_dir, t))}
+    """Every fixture table present under ``sf_dir``, in ``FIXTURE_TABLES``
+    order, resolved concurrently: each ``load`` runs a parquet
+    schema-inference job from the driver, so sequential loads cost one
+    scheduling round-trip each. The first resolution error is raised.
+
+    Each task is wrapped on its own so that it gets a private copy of the
+    caller's local properties (job group, description): one wrapper shares
+    one mutable copy among its threads, in which concurrent SQL executions
+    set and clear each other's execution id."""
+    names = [t for t in FIXTURE_TABLES if os.path.exists(table_path(sf_dir, t))]
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(load), spark, sf_dir, t) for t in names]
+        return {t: f.result() for t, f in zip(names, futures)}
 
 
 _SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}

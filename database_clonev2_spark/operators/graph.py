@@ -118,6 +118,12 @@ def _edges_view(spark: SparkSession, sf_dir: str) -> None:
         # partition); the A/B includes that cost and the lazy form
         # still wins — the frame is post-support-filter small, unlike
         # the sketch self-join pins that stay eager (dedup.py).
+        # PRECONDITION: every column upstream of this pin must be
+        # deterministic. The race is benign only because both computes
+        # of a partition yield the same rows; a rand()/uuid()/
+        # nondeterministic-UDF column would let consumers of one
+        # "checkpoint" see different data — make the pin eager (or drop
+        # the column) before adding one.
         .localCheckpoint(eager=False)
     )
     edges.createOrReplaceTempView("edges")

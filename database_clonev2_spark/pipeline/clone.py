@@ -7,8 +7,9 @@ and continue-on-error. Spark redesign decisions (SURVEY.md §3):
 - **No client materialization.** The reference pulls whole tables into RAM
   (``ToList()``, Program.cs:611,692 — its scalability cliff) and re-reads
   non-identity tables twice. Here each table copy is one lazy
-  ``read → align → write`` plan; executors stream partitions, the double
-  read disappears under lazy evaluation.
+  ``read → align → write`` plan; executors stream partitions, and the
+  row-count echo is a metric observed on the write job, so each table is
+  read once: two Spark jobs per table (schema resolution, write).
 - **Concurrent tables.** The reference is strictly sequential (one table,
   one batch at a time, Program.cs:76-79). Per-table jobs here run from a
   thread pool; Spark's scheduler interleaves their stages.
@@ -20,7 +21,8 @@ and continue-on-error. Spark redesign decisions (SURVEY.md §3):
   (Program.cs:625-674). No renumbering.
 - **Constraints become validation queries** (§1.1): Spark does not enforce
   PK/FK/CHECK; the pipeline renders them into the DDL export and *checks*
-  them with aggregate/anti-join queries, reporting violations.
+  them with aggregate/anti-join queries, reporting violations. All checks
+  of a database run as one action.
 """
 
 from __future__ import annotations
@@ -28,11 +30,13 @@ from __future__ import annotations
 import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import FIXTURE_TABLES, load, table_path
+from ..io import FIXTURE_TABLES, load, load_all, table_path
 from .ddl import TableSpec
 
 
@@ -40,7 +44,7 @@ from .ddl import TableSpec
 class CloneResult:
     copied: dict[str, int] = field(default_factory=dict)  # table -> rows written
     skipped: list[str] = field(default_factory=list)  # idempotent no-ops
-    empty: list[str] = field(default_factory=list)  # B7 short-circuits
+    empty: list[str] = field(default_factory=list)  # B7: zero-row tables
     errors: dict[str, str] = field(default_factory=dict)
 
 
@@ -68,7 +72,12 @@ def clone_table(
 ) -> tuple[str, int]:
     """One table copy: lazy read → align → single write action.
     Returns (status, rows). Statuses: copied / skipped / empty.
-    ``fmt`` selects the sink format (parquet/orc/csv/json via sources.write_table)."""
+    ``fmt`` selects the sink format (parquet/orc/csv/json via sources.write_table).
+
+    The row count (ref Program.cs:682) is observed on the written frame, so
+    the copy reads its source once and never reads its output back. A
+    zero-row source (B7) still writes its table, empty with the source
+    schema, as the reference's DDL phase creates it; it reports ``empty``."""
     from ..sources import write_table
 
     suffix = "parquet" if fmt == "parquet" else fmt
@@ -78,22 +87,11 @@ def clone_table(
     df = load(spark, source_dir, name)
     if target_schema is not None:
         df = align_columns(df, target_schema)
-    # B7 empty-table short-circuit. isEmpty() reads at most one row.
-    if df.isEmpty():
-        return ("empty", 0)
+    rows = Observation()
+    df = df.observe(rows, F.count(F.lit(1)).alias("n"))
     write_table(df, dest, fmt=fmt, mode="overwrite" if overwrite else "errorifexists")
-    # row-count echo (ref Program.cs:682) — read back through the same format
-    if fmt == "parquet":
-        n = spark.read.parquet(dest).count()
-    elif fmt == "orc":
-        n = spark.read.orc(dest).count()
-    else:
-        from ..sources import read_csv, read_json
-
-        n = (
-            read_csv(spark, dest, df.schema) if fmt == "csv" else read_json(spark, dest, df.schema)
-        ).count()
-    return ("copied", n)
+    n = rows.get["n"]
+    return ("copied", n) if n else ("empty", 0)
 
 
 def clone_database(
@@ -107,8 +105,9 @@ def clone_database(
 ) -> CloneResult:
     """The orchestrator (B1, ref CloneDatabase Program.cs:56-112): copy all
     tables, concurrently, continue-on-error (B10). Tables are independent —
-    the thread pool submits one Spark job per table and the scheduler
-    interleaves stages across them."""
+    the thread pool submits each table's jobs and the scheduler interleaves
+    stages across them. Each task carries the caller's job group and
+    description (wrapped per task, as in ``io.load_all``)."""
     result = CloneResult()
     try:
         os.makedirs(target_dir, exist_ok=True)
@@ -131,7 +130,8 @@ def clone_database(
             return name, "error", 0, f"{type(exc).__name__}: {exc}"
 
     with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-        for name, status, n, err in pool.map(run, names):
+        futures = [pool.submit(inheritable_thread_target(spark)(run), name) for name in names]
+        for name, status, n, err in (f.result() for f in futures):
             if status == "copied":
                 result.copied[name] = n
             elif status == "skipped":
@@ -164,8 +164,6 @@ def validate_foreign_key(
     parent_keys = parent.select(
         *[F.col(p).alias(c) for c, p in zip(child_cols, parent_cols)]
     ).distinct()
-    from functools import reduce
-
     all_present = reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in child_cols])
     return (
         child.select(*child_cols)
@@ -178,8 +176,6 @@ def validate_check(df: DataFrame, check_expr: str) -> DataFrame:
     """CHECK as a validation query: rows violating the expression."""
     return df.filter(~F.expr(check_expr))
 
-
-FIXTURE_SPECS: list[TableSpec] = []  # populated lazily by fixture_specs()
 
 # The fixture star schema's constraint catalog — hoisted to module level
 # in round 13 so metadata-only consumers (the FK-closure query derives its
@@ -228,40 +224,52 @@ def fixture_specs(spark: SparkSession, sf_dir: str) -> list[TableSpec]:
     lineitem→part/supplier (FIXTURES.md). Constraint dicts live at module
     level (FIXTURE_PKS/FIXTURE_FKS/FIXTURE_CHECKS) since round 13; this
     adds the live schemas, which is the expensive part."""
-    pk, fks, checks = FIXTURE_PKS, FIXTURE_FKS, FIXTURE_CHECKS
-    specs = []
-    for t in FIXTURE_TABLES:
-        if not os.path.exists(table_path(sf_dir, t)):
-            continue
-        specs.append(
-            TableSpec(
-                name=t,
-                schema=load(spark, sf_dir, t).schema,
-                primary_key=pk.get(t, []),
-                foreign_keys=fks.get(t, []),
-                checks=checks.get(t, []),
-            )
+    return [
+        TableSpec(
+            name=t,
+            schema=df.schema,
+            primary_key=FIXTURE_PKS.get(t, []),
+            foreign_keys=FIXTURE_FKS.get(t, []),
+            checks=FIXTURE_CHECKS.get(t, []),
         )
-    return specs
+        for t, df in load_all(spark, sf_dir).items()
+    ]
 
 
 def validate_database(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     """Run every constraint of the fixture schema as a validation query and
     return violation counts — the observable replacement for engine-enforced
-    constraints."""
-    specs = {s.name: s for s in fixture_specs(spark, sf_dir)}
-    out: dict[str, int] = {}
-    for s in specs.values():
-        df = load(spark, sf_dir, s.name)
-        if s.primary_key:
-            out[f"pk:{s.name}"] = validate_primary_key(df, s.primary_key).count()
-        for name, child_cols, parent, parent_cols in s.foreign_keys:
-            out[f"fk:{name}"] = validate_foreign_key(
-                df, child_cols, load(spark, sf_dir, parent), parent_cols
-            ).count()
-        for name, expr in s.checks:
-            out[f"ck:{name}"] = validate_check(df, expr).count()
-    return out
+    constraints. Keys run per table in ``FIXTURE_TABLES`` order: pk, then
+    fks, then checks.
+
+    All queries run as ONE action: each violating row is tagged with its
+    query's key, the tagged rows are unioned and counted per key in one
+    aggregate (partial counts map-side), and a key with no row counts 0.
+    A ``count()`` per query paid a scheduling round-trip each, which at
+    this scale is most of the cost. One global count per query, unioned,
+    is one action too, but with a single-partition exchange per query it
+    ran slower and grew the driver heap further (validating the
+    benchmark's clone_db input on local[4] with a 1g driver: 2.57-2.79 s
+    and 886-979 MB committed heap, against 2.38-2.48 s and 641-887 MB)."""
+    frames = load_all(spark, sf_dir)
+    queries: list[tuple[str, DataFrame]] = []
+    for t, df in frames.items():
+        if t in FIXTURE_PKS:
+            queries.append((f"pk:{t}", validate_primary_key(df, FIXTURE_PKS[t])))
+        for name, child_cols, parent, parent_cols in FIXTURE_FKS.get(t, []):
+            # a missing parent table raises load's path-not-found error
+            parent_df = frames[parent] if parent in frames else load(spark, sf_dir, parent)
+            queries.append(
+                (f"fk:{name}", validate_foreign_key(df, child_cols, parent_df, parent_cols))
+            )
+        for name, expr in FIXTURE_CHECKS.get(t, []):
+            queries.append((f"ck:{name}", validate_check(df, expr)))
+    if not queries:
+        return {}
+    violations = reduce(DataFrame.unionAll, [q.select(F.lit(key).alias("check")) for key, q in queries])
+    counts = violations.groupBy("check").agg(F.count(F.lit(1)).alias("n")).collect()
+    got = {r["check"]: r["n"] for r in counts}
+    return {key: got.get(key, 0) for key, _ in queries}
 
 
 # --- index → physical layout mapping (SURVEY.md §1.1 index row) -----------

@@ -98,6 +98,47 @@ class TestSpreadFrame:
             df.unpersist()
 
 
+class TestSpreadFrameCallSite:
+    def test_training_pipeline_spreads_a_materialized_frame(self, spark, sf_dir, tmp_path, monkeypatch):
+        """``training_pipeline_e2e`` is the one production caller of
+        ``spread_frame``, so the only path to its ValueError: on a tiny
+        corpus (40 fixture documents plus an exact and a near duplicate)
+        the call must be reached, accept its input and give DuckDB's
+        answer."""
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        import database_clonev2_spark.io as io_mod
+        from database_clonev2_spark.extensions import ORACLES, text
+
+        docs = pq.read_table(f"{sf_dir}/documents.parquet").slice(0, 40).to_pylist()
+        words = docs[1]["text"].split(" ")
+        dups = [
+            {**docs[1], "doc_id": 1000},
+            {**docs[1], "doc_id": 1001, "text": " ".join(words[:-1] + ["zzz"])},
+        ]
+        path = str(tmp_path / "documents.parquet")
+        pq.write_table(pa.Table.from_pylist(docs + dups, pq.read_schema(f"{sf_dir}/documents.parquet")), path)
+
+        calls = []
+
+        def spy(df, *keys):
+            calls.append(keys)
+            return spread_frame(df, *keys)
+
+        monkeypatch.setattr(io_mod, "spread_frame", spy)
+        got = _rows(text.training_pipeline_e2e(spark, str(tmp_path)))
+        assert calls == [("doc_id",)]
+        con = duckdb.connect()
+        try:
+            con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+            want = sorted(con.execute(ORACLES["training_pipeline_e2e"]).fetchall())
+        finally:
+            con.close()
+        assert got == want
+
+
 class TestFkClosureWalk:
     def test_driver_walk_equals_native_recursive_sql(self, spark, sf_dir):
         import __spark_entry__ as entry
